@@ -7,9 +7,10 @@ import org.apache.spark.sql.Dataset
 /** Masking stage: per-channel foreground masks + the shared
   * border-scrub → bbox → apply chain (reference masking/__init__.py
   * `mask()` flow :33-72 and C1-C8 kernels). All per-record kernels run
-  * inside typed `Dataset.map` — one narrow pass, no shuffle; the mask
-  * fan-out X2 is realized by calling [[Masking.apply]] once per branch
-  * on the same cached parent dataset.
+  * inside typed `Dataset.map` — one narrow pass, no shuffle. The
+  * pipeline realizes the mask fan-out X2 inside its single map pass,
+  * calling [[Masking.branchRecord]] once per branch on each record;
+  * [[Masking.branch]] is the same chain as a Dataset op.
   */
 object Masking {
 

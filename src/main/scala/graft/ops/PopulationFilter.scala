@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.core.ImageEvent
 import graft.core.Codecs._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Population threshold filter — reference F2
@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * keep records with stat > Φ⁻¹(0.05; μ, σ), tombstone the rest.
   *
   * The aggregate-then-filter shape: stats are one partial+final
-  * aggregate (2 doubles shuffled), broadcast back into the row pass —
-  * the decorrelated-scalar-subquery plan Catalyst would build for the
-  * SQL equivalent (see rel.RelQueries q18).
+  * aggregate (2 doubles per key shuffled), collected back into the row
+  * pass — the decorrelated-scalar-subquery plan Catalyst would build
+  * for the SQL equivalent (see rel.RelQueries q18). The per-record
+  * pieces ([[filterSum]], [[thresholds]], [[keeps]], [[filterRecord]])
+  * are shared with the fused pipeline, which filters every branch in
+  * one pass.
   */
 object PopulationFilter {
 
@@ -31,20 +34,29 @@ object PopulationFilter {
     s
   }
 
+  /** keep thresholds μ + Φ⁻¹(0.05)·σ per key 0 until `nKeys`, from
+    * `sums` rows (key: Int, s: Double) holding the [[filterSum]] of
+    * every pixel-bearing record. σ is the population std (dask.bag.std,
+    * ddof=0); a key with no such records keeps everything: −inf. */
+  def thresholds(sums: DataFrame, nKeys: Int): Array[Double] = {
+    val q5 = Array.fill(nKeys)(Double.NegativeInfinity)
+    sums.groupBy("key").agg(avg("s"), stddev_pop("s")).collect().foreach { r =>
+      q5(r.getInt(0)) = r.getDouble(1) + Z05 * r.getDouble(2)
+    }
+    q5
+  }
+
+  /** the keep predicate on a record's [[filterSum]] (NaN never passes) */
+  def keeps(sum: Double, q5: Double): Boolean = sum > q5
+
+  def filterRecord(q5: Double)(e: ImageEvent): ImageEvent =
+    if (!e.hasPixels || keeps(filterSum(e), q5)) e else e.tombstone
+
   def apply(spark: SparkSession, ds: Dataset[ImageEvent]): Dataset[ImageEvent] = {
     import spark.implicits._
     val cached = ds.cache() // reused: stats pass + predicate pass (main.py:219 persist)
-    val statsRow = cached.filter(_.hasPixels)
-      .map(filterSum)
-      .toDF("s")
-      // dask.bag.std is the population std (ddof=0)
-      .agg(avg("s").as("mu"), stddev_pop("s").as("std"))
-      .head()
-    val q5 =
-      if (statsRow.isNullAt(0)) Double.NegativeInfinity
-      else statsRow.getDouble(0) + Z05 * statsRow.getDouble(1)
-    cached.map(ImageEvent.whenPixels { e =>
-      if (filterSum(e) > q5) e else e.tombstone
-    })
+    val q5 = thresholds(cached.filter(_.hasPixels)
+      .map(e => (0, filterSum(e))).toDF("key", "s"), 1)(0)
+    cached.map(filterRecord(q5))
   }
 }

@@ -129,17 +129,12 @@ object Cli {
     val wantQuantiles =
       exportNode.flatMap(e => Option(e.get("quantiles_csv"))).exists(_.asBoolean())
 
-    // the processed pre-branch stream is shared between the feature run
-    // and the quantiles export, so the exported extents reflect every
-    // configured stage (projection, illumination, segmentation,
-    // sampling, mask filters) exactly as the branches saw them.
-    // cfg.normalize IS parseConfig's reading of normalization.quantile —
-    // one source of truth with the export and unpersist sites below
-    val cfgNeedsBoundaries = wantQuantiles || cfg.normalize
-    val prepared =
-      if (cfgNeedsBoundaries) Pipeline.prepare(spark, source, cfg).cache()
-      else Pipeline.prepare(spark, source, cfg)
-    val table = Pipeline.runPrepared(spark, prepared, cfg)
+    // the first branch's group extents come back from the pipeline's
+    // own aggregate pass whenever normalization runs or the quantiles
+    // CSV is asked for — after masking and the population filter,
+    // exactly the extents the reference's normalization consumed
+    val (table, boundaries) = Pipeline.runFused(spark,
+      Pipeline.prepare(spark, source, cfg), cfg, withExtents = wantQuantiles)
     // through the Hadoop FS layer: outputDir may be a cluster
     // destination (s3a/hdfs) — java.nio would create a literal local
     // "s3a:/..." directory on the driver
@@ -160,29 +155,19 @@ object Cli {
         Export.parquetPartFiles(table, outputDir, filename, coalesce)
     }
 
-    if (cfg.normalize || wantQuantiles) {
+    boundaries.foreach { mm =>
       // channel_boundaries.csv whenever normalization runs
       // (main.py:49-60,240): wide {channel}_min/{channel}_max columns
-      // indexed by group. The reference emits the SAME quantiles the
-      // normalization consumed — which run after masking AND the
-      // population filter — so the filter must apply here too, or the
-      // CSV would report extents including tombstoned events
-      var firstBranch = Masking.branch(prepared, cfg.branches.head.method,
-        cfg.mainChannelIndex, cfg.combinedIndices)
-      if (cfg.populationFilter)
-        firstBranch = PopulationFilter(spark, firstBranch)
-      val mm = Normalization.groupMinMax(spark, firstBranch)
+      // indexed by group
       if (cfg.normalize)
         Export.channelBoundariesCsv(spark, mm, cfg.channelNames,
           s"$outputDir/channel_boundaries.csv")
       if (wantQuantiles) // legacy long-form export kept under its flag
         Export.quantilesCsv(spark, mm, s"$outputDir/quantiles.csv")
     }
-    if (wantQuantiles || cfg.normalize) prepared.unpersist(false)
-    // release the per-branch caches Normalization.normalize /
-    // Illumination.correct created (their two-pass shape needs the
-    // cache until the export above consumed the result; there is no
-    // per-dataset completion hook, so the run boundary is the scope)
+    // release the pipeline's cached parent (and any cache a stage such
+    // as Illumination.correct made): the export above was its last
+    // consumer, and the run boundary is the cache scope
     spark.catalog.clearCache()
   }
 

@@ -10,17 +10,20 @@ import org.apache.spark.sql.functions.col
   *
   * {{{
   * source → repartition → [project] → [illumination-correct]
-  *   → [segment] → [sample/limit] → N mask branches, per branch:
-  *     [filters] → method → border-scrub → bbox → apply
+  *   → [segment] → [sample/limit] → [mask filters]
+  *   → one map pass, per record and per branch (each mask branch + raw):
+  *     method → border-scrub → bbox → apply
   *     → [population filter] → [normalize] → features
-  *   → join branches on the event UID → coalesce → export
+  *   → one wide row per event → coalesce → export
   * }}}
   *
   * Branch concat: the reference concatenates branch feature tables
   * column-wise relying on identical partitioning (main.py:260-268, J3).
-  * Here every branch's feature table carries the stable event UID
-  * (path, idx, id) and branches are equi-joined on it — order-safe by
-  * construction; with one branch no join happens at all.
+  * Here every branch's cells are computed from the same record inside
+  * one map, so the concat is column-aligned by construction and the
+  * row count is the input's, repeated event keys included. The
+  * population filter and normalization need population values; they
+  * come from a summary pass before the map (see [[Pipeline.runFused]]).
   */
 final case class MaskBranchConfig(
     name: String,
@@ -73,28 +76,21 @@ object Pipeline {
       cfg: PipelineConfig): DataFrame =
     runPrepared(spark, prepare(spark, source, cfg), cfg)
 
-  /** [[run]] fused straight into the registry's digest reduction
-    * (r16): for a per-record config (no population filter /
-    * normalization) the wide feature row is never materialized as a
-    * PLANNED schema — the single fused map emits (keys..., row_digest,
-    * schema_digest) directly via [[graft.rel.Digest.fusedDigester]],
-    * collapsing the several-hundred-column encoder + ~5-nodes-per-
-    * column digest projection Catalyst was measured spending ~2.3 s/
-    * cell planning (p01). Aggregate-bearing configs fall back to the
-    * wide path + [[graft.rel.Digest.rows]] — same result either way
-    * (the committed goldens gate both). */
+  /** [[run]] fused straight into the registry's digest reduction: the
+    * wide feature row is never materialized as a PLANNED schema — the
+    * single fused map emits (keys..., row_digest, schema_digest)
+    * directly via [[graft.rel.Digest.fusedDigester]], collapsing the
+    * several-hundred-column encoder + ~5-nodes-per-column digest
+    * projection Catalyst was measured spending ~2.3 s/cell planning
+    * (p01). Same result as [[graft.rel.Digest.rows]] over [[run]]
+    * (DigestSpec and the committed goldens gate that). */
   def runDigested(spark: SparkSession, source: Dataset[ImageEvent],
-      cfg: PipelineConfig, keyCols: Seq[String]): DataFrame = {
-    val ds = prepare(spark, source, cfg)
-    if (!cfg.populationFilter && !cfg.normalize)
-      fusedBranches(ds, cfg, digestKeys = Some(keyCols))
-    else graft.rel.Digest.rows(runPrepared(spark, ds, cfg), keyCols)
-  }
+      cfg: PipelineConfig, keyCols: Seq[String]): DataFrame =
+    runFused(spark, prepare(spark, source, cfg), cfg, Some(keyCols))._1
 
   /** every pre-branch stage (repartition → project → illumination →
-    * segment → sample → mask filters) — exposed so export-time extras
-    * (Cli's quantiles CSV) compute from the SAME processed stream the
-    * branches consume, not from the raw source. */
+    * segment → sample → mask filters) — exposed for callers that
+    * inspect or time the processed stream the branches consume. */
   def prepare(spark: SparkSession, source: Dataset[ImageEvent],
       cfg: PipelineConfig): Dataset[ImageEvent] = {
     var ds = if (cfg.nPartitions > 0) source.repartition(cfg.nPartitions) else source
@@ -137,119 +133,106 @@ object Pipeline {
   /** branch fan-out + feature extraction over an already-prepared
     * stream (see [[prepare]]) */
   def runPrepared(spark: SparkSession, ds: Dataset[ImageEvent],
-      cfg: PipelineConfig): DataFrame = {
-    // mask fan-out X2. When every branch stage is per-record (no
-    // population filter / normalization aggregates), ALL branches fuse
-    // into ONE map pass producing the full wide row — no joins, no
-    // repeated parent passes, and column-aligned concat is correct by
-    // construction (SURVEY.md J3: the preferred replacement for the
-    // reference's row-order-dependent axis-1 concat).
-    if (!cfg.populationFilter && !cfg.normalize) fusedBranches(ds, cfg)
-    else {
-      // aggregate-bearing branches: per-branch plans from one cached
-      // parent, joined on the stable event UID
-      val multiConsumer = cfg.branches.length > 1 || includeRaw(cfg)
-      val parent = if (multiConsumer) ds.cache() else ds
-      def buildBranch(b: MaskBranchConfig): DataFrame = {
-        var branch = Masking.branch(parent, b.method, cfg.mainChannelIndex, cfg.combinedIndices)
-        if (cfg.populationFilter) branch = PopulationFilter(spark, branch)
-        if (cfg.normalize) branch = Normalization.normalize(spark, branch)
-        Features.extract(branch, cfg.channelNames,
-          b.featureTypes.getOrElse(cfg.featureTypes), branchPrefix(b))
-      }
-      // the reference's raw branch rides through the same per-branch
-      // loop (filter + normalization) WITHOUT any masking
-      def buildRaw(): DataFrame = {
-        var raw = parent
-        if (cfg.populationFilter) raw = PopulationFilter(spark, raw)
-        if (cfg.normalize) raw = Normalization.normalize(spark, raw)
-        Features.extract(raw, cfg.channelNames, Seq("raw"), "raw")
-      }
-      val thunks: Seq[() => DataFrame] =
-        cfg.branches.map(b => () => buildBranch(b)) ++
-          (if (includeRaw(cfg)) Seq(() => buildRaw()) else Nil)
-      // r16 (guide §2.6): every aggregate-bearing chain BLOCKS the
-      // driver on its stats jobs (population-filter head, normalization
-      // extent collect) — the chains are independent, so build them
-      // concurrently instead of serializing 2×(chains) small jobs.
-      // The shared parent is materialized FIRST so concurrent first
-      // jobs cannot compute its partitions twice (the block manager
-      // dedupes storage, not computation). Per-chain results are
-      // unchanged: each chain's aggregates see the same cached parent.
-      val branchTables =
-        if (thunks.length <= 1) thunks.map(_())
-        else {
-          parent.count()
-          val pool = java.util.concurrent.Executors
-            .newFixedThreadPool(math.min(thunks.length, 4))
-          try thunks.map(t => pool.submit(
-            new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = t()
-            })).map(_.get())
-          finally pool.shutdown()
-        }
-      branchTables.reduceLeft { (a, b) =>
-        a.join(b.drop("meta_group"), // group is branch-invariant; keep one copy
-          a("meta_path") === b("meta_path") && a("meta_idx") === b("meta_idx") &&
-            a("meta_id") === b("meta_id"))
-          .drop(b("meta_path")).drop(b("meta_idx")).drop(b("meta_id"))
-      }
-    }
-  }
+      cfg: PipelineConfig): DataFrame =
+    runFused(spark, ds, cfg)._1
 
-  /** all branches in one per-record pass → one wide Row; each branch
-    * may select its own feature types (the reference's per-branch
-    * feature_extraction map) */
-  private def fusedBranches(ds: org.apache.spark.sql.Dataset[ImageEvent],
-      cfg: PipelineConfig,
-      digestKeys: Option[Seq[String]] = None): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val perBranch = cfg.branches.map { b =>
-      val types = b.featureTypes.getOrElse(cfg.featureTypes)
-      val names = Features.featureNames(cfg.channelNames, types)
-      (b, Features.layout(cfg.channelNames, types), names)
-    }
-    val prefixes = cfg.branches.map(branchPrefix)
-    val metaFields = Features.schema(cfg.channelNames, cfg.featureTypes, null)
-      .fields.take(4)
-    val rawNames =
-      if (includeRaw(cfg)) Features.featureNames(cfg.channelNames, Seq("raw"))
-      else Seq.empty
-    val featFields = prefixes.zip(perBranch).flatMap { case (p, (_, _, names)) =>
-      names.map(n => org.apache.spark.sql.types.StructField(
-        Features.renamed(n, p, isLoaderMeta = false),
-        org.apache.spark.sql.types.DoubleType))
-    } ++ rawNames.map(n => org.apache.spark.sql.types.StructField(
-      Features.renamed(n, "raw", isLoaderMeta = false),
-      org.apache.spark.sql.types.DoubleType))
-    val sch = StructType(metaFields ++ featFields)
+  /** The one execution path: every chain — each mask branch, plus the
+    * unmasked raw branch — runs in ONE map pass over `ds`, producing
+    * the full wide row (column-aligned concat, correct by construction:
+    * SURVEY.md J3's replacement for the reference's row-order-dependent
+    * axis-1 concat, main.py:260-268). Per chain and record:
+    * branchRecord → [population filter] → [normalize] → featureCells.
+    *
+    * The two aggregate stages need population values first. One pass
+    * over the cached parent reduces every chain's pixel-bearing records
+    * to a small cached (chain, group, filter sum, channel extents)
+    * summary; one aggregate over it gives each chain's keep threshold,
+    * a second each chain's group extents over the records that
+    * threshold keeps. Both are collected and broadcast into the map,
+    * so every mask is computed twice per event (summary + map) and no
+    * branch table is ever joined.
+    *
+    * Also returns the first chain's group extents — the ones the CLI
+    * exports as channel_boundaries.csv / quantiles.csv — when
+    * normalization is on or `withExtents` asks for them. */
+  private[pipeline] def runFused(spark: SparkSession, ds: Dataset[ImageEvent],
+      cfg: PipelineConfig, digestKeys: Option[Seq[String]] = None,
+      withExtents: Boolean = false): (DataFrame, Option[Normalization.MinMax]) = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType, StringType}
+    // (prefix, feature types, mask method; None = the unmasked raw branch)
+    val chains = cfg.branches.map(b => (branchPrefix(b),
+      b.featureTypes.getOrElse(cfg.featureTypes), Option(b.method))) ++
+      (if (includeRaw(cfg)) Seq(("raw", Seq("raw"), None)) else Nil)
+    val channelNames = cfg.channelNames
     val mainCh = cfg.mainChannelIndex
     val combined = cfg.combinedIndices
-    val channelNames = cfg.channelNames
-    val rawLayout =
-      if (rawNames.nonEmpty) Some(Features.layout(channelNames, Seq("raw")))
-      else None
-    // the shared per-record wide-row assembly (meta ++ every branch's
-    // feature cells, in schema field order)
-    def rowCells(e: ImageEvent): Array[Any] = {
-      val cells = perBranch.iterator.flatMap { case (b, lay, _) =>
-        val be = Masking.branchRecord(b.method, mainCh, combined)(e)
-        Features.featureCells(be, channelNames, lay)
-      }.toArray ++ rawLayout.toArray.flatMap { lay =>
-        Features.featureCells(e, channelNames, lay)
-      }
-      (Array[Any](e.path, e.idx, e.group, e.id) ++ cells)
+    val methods = chains.map(_._3).toArray
+    def chainRecord(i: Int, e: ImageEvent): ImageEvent =
+      methods(i).fold(e)(m => Masking.branchRecord(m, mainCh, combined)(e))
+
+    val filtered = cfg.populationFilter
+    val normalized = cfg.normalize
+    val wantExtents = normalized || withExtents
+    // chains the summary covers: all when an aggregate stage runs, the
+    // first alone when only its extents are exported
+    val nSummarized =
+      if (filtered || normalized) chains.length else if (withExtents) 1 else 0
+    val parent = if (nSummarized > 0) ds.cache() else ds
+    val aggregates = if (nSummarized == 0) None else Some {
+      import spark.implicits._
+      val summary = parent.flatMap { e =>
+        (0 until nSummarized).iterator.map(i => (i, chainRecord(i, e)))
+          .filter(_._2.hasPixels).map { case (i, r) =>
+            (i, r.group, PopulationFilter.filterSum(r), Normalization.extents(r))
+          }
+      }.cache()
+      val q5 =
+        if (filtered) PopulationFilter.thresholds(summary.toDF("key", "group", "s", "ex"),
+          nSummarized)
+        else Array.empty[Double]
+      val kept =
+        if (filtered) summary.filter(r => PopulationFilter.keeps(r._3, q5(r._1)))
+        else summary
+      val extents =
+        if (wantExtents) Normalization.keyedMinMax(kept.flatMap { case (i, g, _, ex) =>
+          ex.map { case (c, mn, mx) => (i, g, c, mn, mx) }
+        }.toDF("key", "group", "channel", "mn", "mx"), nSummarized)
+        else Array.empty[Normalization.MinMax]
+      summary.unpersist(false)
+      (q5, extents)
     }
-    digestKeys match {
+    val bc = aggregates.map(spark.sparkContext.broadcast(_))
+
+    val layouts = chains.map(c => Features.layout(channelNames, c._2)).toArray
+    val metaFields = Features.schema(channelNames, cfg.featureTypes, null)
+      .fields.take(4)
+    val featFields = chains.flatMap { case (p, types, _) =>
+      Features.featureNames(channelNames, types).map(n =>
+        StructField(Features.renamed(n, p, isLoaderMeta = false), DoubleType))
+    }
+    val sch = StructType(metaFields ++ featFields)
+    // the per-record wide-row assembly (meta ++ every chain's feature
+    // cells, in schema field order)
+    def rowCells(e: ImageEvent): Array[Any] = {
+      val agg = bc.map(_.value)
+      val cells = layouts.indices.iterator.flatMap { i =>
+        var r = chainRecord(i, e)
+        agg.foreach { case (q5, extents) =>
+          if (filtered) r = PopulationFilter.filterRecord(q5(i))(r)
+          if (normalized) r = Normalization.normalizeRecord(extents(i))(r)
+        }
+        Features.featureCells(r, channelNames, layouts(i))
+      }.toArray
+      Array[Any](e.path, e.idx, e.group, e.id) ++ cells
+    }
+    val table = digestKeys match {
       case None =>
-        val enc = org.apache.spark.sql.Encoders.row(sch)
-        ds.map({ e =>
-          org.apache.spark.sql.Row.fromSeq(rowCells(e).toSeq)
-        })(enc)
+        parent.map(e => org.apache.spark.sql.Row.fromSeq(rowCells(e).toSeq))(
+          org.apache.spark.sql.Encoders.row(sch))
       case Some(keys) =>
-        // fused digest (r16): the wide row exists only as a transient
-        // Array inside the map — the PLANNED schema is keys+2 strings,
-        // so Catalyst never analyzes the wide encoder or a per-column
+        // fused digest: the wide row exists only as a transient Array
+        // inside the map — the PLANNED schema is keys+2 strings, so
+        // Catalyst never analyzes the wide encoder or a per-column
         // digest projection (see Digest.fusedDigester)
         val (schemaDigest, digestFn) = graft.rel.Digest.fusedDigester(sch)
         val byName = sch.fieldNames.zipWithIndex.toMap
@@ -258,8 +241,7 @@ object Pipeline {
           keys.map(StructField(_, StringType)) ++ Seq(
             StructField("row_digest", StringType),
             StructField("schema_digest", StringType)))
-        val enc = org.apache.spark.sql.Encoders.row(outSch)
-        ds.map({ e =>
+        parent.map({ e =>
           val all = rowCells(e)
           // cast-to-string key semantics of Digest.rows (null stays
           // null; int/long/string render identically to Spark's cast)
@@ -268,8 +250,9 @@ object Pipeline {
           }
           org.apache.spark.sql.Row.fromSeq(
             ks.toSeq ++ Seq(digestFn(all), schemaDigest))
-        })(enc).orderBy(keys.map(col): _*)
+        })(org.apache.spark.sql.Encoders.row(outSch)).orderBy(keys.map(col): _*)
     }
+    (table, if (wantExtents) aggregates.map(_._2.head) else None)
   }
 
   /** the reference's own e2e shape (test/data/scip_zarr.yml): synthetic

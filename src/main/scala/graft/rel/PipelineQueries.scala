@@ -488,14 +488,15 @@ object PipelineQueries {
         populationFilter = true,
         normalize = true,
         featureTypes = Seq("regions", "bbox", "intensity"))
-      Pipeline.run(s, Synthetic.cells(s, 24, channels = 2), cfg)
+      Pipeline.runDigested(s, Synthetic.cells(s, 24, channels = 2), cfg,
+        DigestKeys)
     }
   )
 
   val all: Seq[Q] = digestables.map { case (name, fn) =>
     val wrapped = (s: org.apache.spark.sql.SparkSession, d: String) => {
       val out = fn(s, d)
-      // a fn may fold the digest into its own fused map (p01/p07 —
+      // a fn may fold the digest into its own fused map (p01/p03/p07 —
       // Pipeline.runDigested); everything else digests here as before
       if (Digest.isDigested(out, DigestKeys)) out
       else Digest.rows(out, DigestKeys)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.export.Export
+import graft.ops.{Masking, Normalization, PopulationFilter}
 import java.nio.file.{Files, Paths}
 
 /** the CLI batch entry end-to-end: JSON config → pipeline → exports */
@@ -20,6 +22,35 @@ class CliSpec extends SparkSpec {
     assert(features.columns.exists(_.startsWith("feat_")))
     val q = Files.readString(Paths.get(out, "quantiles.csv"))
     assert(q.linesIterator.size > 1, q)
+  }
+
+  test("channel_boundaries.csv: first branch's extents after masking and " +
+    "the population filter") {
+    val out = Files.createTempDirectory("cli-boundaries").toString
+    val config = Files.createTempFile("cli", ".json")
+    Files.writeString(config,
+      """{ "load": {"format": "synthetic", "kind": "cells", "n": 24,
+        |            "channels": 2, "channel_names": ["dapi", "marker"]},
+        |  "mask": [{"name": "otsu", "method": "otsu"},
+        |           {"name": "circle", "method": "circle"}],
+        |  "filter": {"population": true},
+        |  "normalization": {"quantile": true},
+        |  "feature_extraction": {"types": ["regions", "intensity"]},
+        |  "export": {"coalesce": 1} }""".stripMargin)
+    Cli.run(spark, out, config.toString)
+    val root = YamlConfig.normalize(
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(Files.readAllBytes(config)))
+    val cfg = Cli.parseConfig(root)
+    val prepared = Pipeline.prepare(spark, Cli.loadSource(spark, root.get("load")), cfg)
+    val first = PopulationFilter(spark, Masking.branch(prepared,
+      cfg.branches.head.method, cfg.mainChannelIndex, cfg.combinedIndices))
+    val expected = Files.createTempDirectory("cli-boundaries-ref").resolve("b.csv")
+    Export.channelBoundariesCsv(spark, Normalization.groupMinMax(spark, first),
+      cfg.channelNames, expected.toString)
+    spark.catalog.clearCache()
+    val got = Files.readString(Paths.get(out, "channel_boundaries.csv"))
+    assert(got.linesIterator.size == 5, got) // header + 4 groups
+    assert(got == Files.readString(expected))
   }
 
   test("yaml config in graft key shape runs the same pipeline as json") {

@@ -1,7 +1,10 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.ops.{Features, Masking}
+import graft.core.{ImageEvent, Synthetic}
+import graft.core.Codecs._
+import graft.ops.{Features, Masking, Normalization, PopulationFilter}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** E2e pipeline test mirroring the reference's own
   * (test/test_main.py:10-58 over test/data/scip_zarr.yml): 4 mask
@@ -76,35 +79,37 @@ class PipelineSpec extends SparkSpec {
     assert(names.count(_ == "mean_c") == 1)
   }
 
+  private val uid = Seq("meta_path", "meta_idx", "meta_id")
+
+  /** the per-branch Dataset chain (Masking.branch → PopulationFilter →
+    * Normalization.normalize → Features.extract), one table per mask
+    * branch plus the unmasked raw branch, equi-joined on the event UID */
+  private def perBranchJoined(source: Dataset[ImageEvent],
+      cfg: PipelineConfig): DataFrame = {
+    def chain(ds: Dataset[ImageEvent], types: Seq[String], prefix: String) = {
+      var d = ds
+      if (cfg.populationFilter) d = PopulationFilter(spark, d)
+      if (cfg.normalize) d = Normalization.normalize(spark, d)
+      Features.extract(d, cfg.channelNames, types, prefix)
+    }
+    (cfg.branches.map(b => chain(Masking.branch(source, b.method, 0),
+      cfg.featureTypes, b.name)) :+ chain(source, Seq("raw"), "raw"))
+      .reduceLeft((a, b) => a.join(b.drop("meta_group"), uid))
+  }
+
   test("fused single-pass path equals the per-branch join path") {
-    import graft.core.Synthetic
-    val cfgFused = PipelineConfig(
+    import spark.implicits._
+    val perRecord = PipelineConfig(
       channelNames = Seq("ch0", "ch1", "ch2"),
       branches = Seq(MaskBranchConfig("a", Masking.Circle),
         MaskBranchConfig("b", Masking.Spot(3))),
       featureTypes = Seq("regions", "bbox", "intensity"))
-    // normalize=true forces the join path; with identity-range images
-    // min=0/max=99 -> normalized pixels differ, so compare structure +
-    // meta + regions only... instead force the join path via a private
-    // replay: population/normalize off but join manually per branch.
-    val fused = Pipeline.run(spark, Synthetic.conftest(spark, 6), cfgFused)
-    val a = graft.ops.Features.extract(
-      Masking.branch(Synthetic.conftest(spark, 6), Masking.Circle, 0),
-      Seq("ch0", "ch1", "ch2"), Seq("regions", "bbox", "intensity"), "a")
-    val b = graft.ops.Features.extract(
-      Masking.branch(Synthetic.conftest(spark, 6), Masking.Spot(3), 0),
-      Seq("ch0", "ch1", "ch2"), Seq("regions", "bbox", "intensity"), "b")
-    // the reference's mandatory unmasked raw branch (main.py:206)
-    val raw = graft.ops.Features.extract(
-      Synthetic.conftest(spark, 6),
-      Seq("ch0", "ch1", "ch2"), Seq("raw"), "raw")
-    val joined = a
-      .join(b.drop("meta_group"), Seq("meta_path", "meta_idx", "meta_id"))
-      .join(raw.drop("meta_group"), Seq("meta_path", "meta_idx", "meta_id"))
-    assert(fused.count() == 6 && joined.count() == 6)
-    val fCols = fused.columns.sorted
-    assert(fCols.toSeq == joined.columns.sorted.toSeq)
-    val key = Seq("meta_idx")
+    // event 3 is a near-blank outlier the population filter tombstones
+    def outlier = Synthetic.conftest(spark, 6).map(e =>
+      if (e.idx == 3) e.copy(pixels = e.pixels.map(_ * 1e-6f)) else e)
+    val inputs = Seq(
+      (perRecord, () => Synthetic.conftest(spark, 6)),
+      (perRecord.copy(populationFilter = true, normalize = true), () => outlier))
     // canonicalize NaN: Scala's boxed-numeric == compares primitive
     // doubles, so NaN slots (legitimate scipy-parity outputs for
     // zero-variance views) would never compare equal to themselves
@@ -112,11 +117,45 @@ class PipelineSpec extends SparkSpec {
       case d: java.lang.Double if d.isNaN => "NaN"
       case other => other
     }
-    val f = fused.collect().map(r => r.getAs[Long]("meta_idx") ->
-      fCols.map(c => canon(r.get(fused.columns.indexOf(c)))).toSeq).toMap
-    val j = joined.collect().map(r => r.getAs[Long]("meta_idx") ->
-      fCols.map(c => canon(r.get(joined.columns.indexOf(c)))).toSeq).toMap
-    assert(f == j)
+    for ((cfg, source) <- inputs) {
+      val fused = Pipeline.run(spark, source(), cfg)
+      val joined = perBranchJoined(source(), cfg)
+      val fCols = fused.columns.sorted
+      assert(fCols.toSeq == joined.columns.sorted.toSeq)
+      def byIdx(df: DataFrame) = df.collect().map(r => r.getAs[Long]("meta_idx") ->
+        fCols.map(c => canon(r.get(df.columns.indexOf(c)))).toSeq).toMap
+      val f = byIdx(fused)
+      assert(f.size == 6 && joined.count() == 6)
+      assert(f == byIdx(joined))
+      val plan = fused.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join"), plan)
+      if (cfg.populationFilter) { // the outlier is tombstoned in every chain
+        val feats = fCols.filter(_.startsWith("feat_"))
+        val row = fused.where($"meta_idx" === 3).collect().head
+        assert(feats.forall(c => row.isNullAt(row.fieldIndex(c))))
+      }
+    }
+  }
+
+  test("repeated event keys (sample with replacement) keep one row per draw") {
+    import spark.implicits._
+    for (n <- Seq(1, 2)) {
+      val cfg = PipelineConfig(
+        channelNames = Seq("ch0", "ch1", "ch2"),
+        sampleK = Some(12), sampleWithReplacement = true, normalize = true,
+        branches = Seq(MaskBranchConfig("a", Masking.Circle),
+          MaskBranchConfig("b", Masking.Spot(3))).take(n),
+        featureTypes = Seq("regions", "intensity"))
+      val drawn = Pipeline.prepare(spark, Synthetic.conftest(spark, 6), cfg)
+        .map(e => (e.path, e.idx, e.id)).collect()
+        .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
+      assert(drawn.values.exists(_ > 1), drawn) // keys do repeat
+      val out = Pipeline.run(spark, Synthetic.conftest(spark, 6), cfg)
+      assert(out.count() == 12)
+      val counts = out.groupBy(uid.map(out(_)): _*).count().collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getInt(2)) -> r.getLong(3)).toMap
+      assert(counts == drawn)
+    }
   }
 
   test("tombstoned events keep meta, lose features (every input appears)") {

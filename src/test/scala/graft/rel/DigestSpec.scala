@@ -57,4 +57,35 @@ class DigestSpec extends SparkSpec {
     val many = Digest.rows(df(rows).repartition(13), Seq("k")).collect().toSeq
     assert(one == many)
   }
+
+  test("fusedDigester equals Digest.rows on a generated wide frame") {
+    val keys = Seq("ks", "kl", "ki")
+    val wide = StructType(Seq(StructField("ks", StringType),
+      StructField("kl", LongType), StructField("ki", IntegerType)) ++
+      (0 until 16).map(i => StructField(s"d$i", DoubleType)) ++ Seq(
+        StructField("f", FloatType), StructField("s", StringType),
+        StructField("n", LongType)))
+    val rnd = new scala.util.Random(11)
+    val specials = Array[Any](null, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, -0.0, 0.0)
+    def dbl(): Any =
+      if (rnd.nextInt(3) == 0) specials(rnd.nextInt(specials.length))
+      else rnd.nextGaussian() * math.pow(10, rnd.nextInt(25) - 12)
+    val rows = (0 until 300).map { i =>
+      Row.fromSeq(Seq(s"k$i", rnd.nextLong(), rnd.nextInt()) ++
+        (0 until 16).map(_ => dbl()) ++ Seq(
+          dbl() match { case d: Double => d.toFloat; case other => other },
+          if (rnd.nextInt(4) == 0) null else rnd.alphanumeric.take(6).mkString,
+          if (rnd.nextInt(4) == 0) null else rnd.nextLong()))
+    }
+    val viaRows = Digest.rows(
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), wide), keys)
+      .collect().map(r => (0 until 5).map(r.getString)).toSet
+    val (schemaDigest, digestFn) = Digest.fusedDigester(wide)
+    val fused = rows.map { r =>
+      (0 until 3).map(r.get(_).toString) ++ Seq(digestFn(r.toSeq.toArray), schemaDigest)
+    }.toSet
+    assert(viaRows.size == 300)
+    assert(fused == viaRows)
+  }
 }
